@@ -24,7 +24,13 @@ single-JVM sandboxes.
   it uses reliable ``DataFrame.checkpoint``: blocks are written to the
   fault-tolerant store and survive executor loss. Pair it with
   ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` so
-  reference-collected checkpoints are deleted from the store.
+  reference-collected checkpoints are deleted from the store. The frame
+  is persisted first: the checkpoint write can be a job of its own (a
+  lazy checkpoint is written after the first action), and without the
+  cache it recomputes the plan — twice the work, and a nondeterministic
+  plan could materialize differently for the action and the checkpoint.
+  An eager checkpoint releases the cache once written; a lazy one keeps
+  it until the caller unpersists ``df``.
 - otherwise (the sandbox / ``local[*]`` case) it falls back to
   ``localCheckpoint`` — same semantics, no extra I/O, acceptable
   because a single-JVM "cluster" cannot lose an executor without
@@ -68,5 +74,8 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     ``eager=False`` defers materialization to the first action.
     """
     if checkpoint_dir_configured(df):
-        return df.checkpoint(eager=eager)
+        out = df.persist().checkpoint(eager=eager)
+        if eager:
+            df.unpersist()
+        return out
     return df.localCheckpoint(eager=eager)

@@ -8,7 +8,11 @@ logs (ST4: download_and_merge.py:167-171, download_warc_segments.py:73-81).
 One **round** =
     frontier ──robots gate──▶ polite batch (per-host budget, salted)
             ──fetch (lookup join vs pages)──▶ extract (Arrow UDF)
-            ──commit: articles / failures / trace / metrics / seen / frontier
+            ──commit: articles / failures / trace / seen / frontier
+
+``trace`` is the round's per-URL outcome log (one row per selected URL,
+``fetch_error`` null on success) — the reference's append-only success /
+fail log; per-host round metrics are a view over it (``metrics_df``).
 
 State lives in snapshot tables (tables.SnapshotTable — Iceberg-style
 atomic commits), so a crash at any point resumes from the last committed
@@ -19,7 +23,7 @@ all round outputs are deterministic functions of the round-R frontier).
 Scale notes (10^10 URLs, 1000 executors):
 - the fetch is an injectable Transport (sources.transport): the default
   lookup join broadcasts the *batch* (hosts x budget rows) only while it
-  is provably small (``broadcast_batch_limit``); a web-shaped batch joins
+  is provably small (``BROADCAST_BATCH_LIMIT``); a web-shaped batch joins
   un-hinted so AQE + a bucketed pages layout keep the 100 TB side
   un-shuffled either way;
 - the politeness window is salted (operators.schedule) so a single-host
@@ -50,6 +54,7 @@ from ..operators.seen_set import (
     anti_join_seen,
     with_url_key,
 )
+from ..sources.transport import LookupJoinTransport, broadcast_hint
 from ..tables import SnapshotTable
 
 FRONTIER_SCHEMA = T.StructType(
@@ -86,9 +91,7 @@ class CrawlJob:
         max_retries: int = 3,
         bloom_threshold: int = 2_000_000,
         round_seconds: float | None = None,
-        broadcast_batch_limit: int = 1_000_000,
         transport=None,
-        retry_backoff: bool = True,
         backoff_cap_rounds: int = 300,
         seen_state: str = "bloom",
     ):
@@ -101,10 +104,6 @@ class CrawlJob:
         self.salt_buckets = salt_buckets
         self.max_retries = max_retries
         self.bloom_threshold = bloom_threshold
-        # fetch-join strategy cutover: batches at or under this row count
-        # are broadcast (the single-host reference shape); larger batches
-        # join un-hinted so AQE and the bucketed pages layout decide
-        self.broadcast_batch_limit = broadcast_batch_limit
         # injectable fetch stage (sources.transport.Transport); None ->
         # LookupJoinTransport over the ``pages`` argument of run_round
         self.transport = transport
@@ -112,8 +111,7 @@ class CrawlJob:
         # failing on attempt a becomes eligible again after
         # min(2 * 2^a, cap) rounds (1 round ~ 1 s of the reference's
         # per-request sleep; the 300 cap is download_and_merge.py:179's
-        # 300 s ceiling). retry_backoff=False restores retry-next-round.
-        self.retry_backoff = retry_backoff
+        # 300 s ceiling). backoff_cap_rounds=1 retries next round.
         self.backoff_cap_rounds = backoff_cap_rounds
         # cross-round filter state (BloomSeenSet or CuckooSeenSet per
         # seen_state): built lazily the first time the seen table crosses
@@ -135,8 +133,6 @@ class CrawlJob:
         self.articles = t("articles")
         self.failures = t("failures")
         self.trace = t("trace")
-        self.metrics = t("metrics")
-        self.lineage = t("lineage")
 
     # -- seeding ---------------------------------------------------------------
 
@@ -495,13 +491,11 @@ class CrawlJob:
 
         # fetch stage (J2/S6) through the injectable transport seam; the
         # default lookup join broadcasts the batch only under
-        # broadcast_batch_limit (size-aware — see sources.transport).
-        # persisted: consumed by the ok/fail splits, the failures commit,
-        # the per-host metrics, and counters.
-        from ..sources.transport import LookupJoinTransport
-
+        # BROADCAST_BATCH_LIMIT (size-aware — see sources.transport).
+        # persisted: consumed by the ok/fail splits, the failures and
+        # trace commits, and counters.
         transport = self.transport or LookupJoinTransport(
-            pages, self.broadcast_batch_limit, transient_fail
+            pages, fail_predicate=transient_fail
         )
         result = transport.fetch(batch, n_rows_hint=n_selected).persist()
         fetched = result.filter(F.col("_fetch_error").isNull()).drop("_fetch_error")
@@ -526,11 +520,14 @@ class CrawlJob:
             .withColumn("round", F.lit(rnd))
         )
         self._append_once(self.failures, perm_failures, rnd)
+        # the outcome log: the transport contract gives one result row
+        # per batch row, so this is the schedule plus each URL's outcome
         self._append_once(
             self.trace,
-            batch.select(
+            result.select(
                 F.lit(rnd).alias("round"), "host", "host_rank",
                 "crawl_rank", "page", "line_no", "url",
+                F.col("_fetch_error").alias("fetch_error"),
             ),
             rnd,
         )
@@ -538,39 +535,6 @@ class CrawlJob:
             fetched.select("url_sha1")
             .unionByName(exhausted.select("url_sha1"))
         )
-        per_host = (
-            batch.groupBy("host")
-            .agg(F.count("*").alias("n_selected"))
-            .join(
-                fetched.groupBy("host").agg(F.count("*").alias("n_fetched")),
-                "host", "left",
-            )
-            .join(
-                missing.groupBy("host").agg(F.count("*").alias("n_fetch_failed")),
-                "host", "left",
-            )
-            .select(
-                F.lit(rnd).alias("round"), "host", "n_selected",
-                F.coalesce("n_fetched", F.lit(0)).alias("n_fetched"),
-                F.coalesce("n_fetch_failed", F.lit(0)).alias("n_fetch_failed"),
-            )
-        )
-        self._append_once(self.metrics, per_host, rnd)
-        # per-partition lineage: which physical partition produced how many
-        # fetched rows this round, with the key range it covered (audit
-        # trail for a 1000-executor run; partition ids are physical, so
-        # this table is observability, not part of the deterministic state)
-        per_part = (
-            fetched.groupBy(F.spark_partition_id().alias("part_id"))
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.min("url_sha1").alias("min_key"),
-                F.max("url_sha1").alias("max_key"),
-            )
-            .select(F.lit(rnd).alias("round"), "part_id", "n_rows",
-                    "min_key", "max_key")
-        )
-        self._append_once(self.lineage, per_part, rnd)
         new_seen = done_keys.distinct()
         if self._append_once(self.seen, new_seen, rnd):
             # extend the cross-round Bloom state only when the table
@@ -590,23 +554,18 @@ class CrawlJob:
         # reference pacing mapped to rounds: failing on attempt a defers
         # re-eligibility by min(2*2^a, cap) rounds (2*2^attempt seconds at
         # download_warc_segments.py:66-70; 300 s cap at
-        # download_and_merge.py:179). Off -> retry next round (round 1
-        # behavior). Computed from the PRE-increment attempt.
-        backoff = (
-            F.least(F.lit(2) * F.pow(F.lit(2.0), F.col("attempt")),
-                    F.lit(float(self.backoff_cap_rounds))).cast("int")
-            if self.retry_backoff else F.lit(1)
-        )
+        # download_and_merge.py:179). Computed from the PRE-increment
+        # attempt.
+        backoff = F.least(
+            F.lit(2) * F.pow(F.lit(2.0), F.col("attempt")),
+            F.lit(float(self.backoff_cap_rounds))).cast("int")
         requeued = (
             retryable
             .withColumn("not_before_round", (F.lit(rnd) + backoff).cast("int"))
             .withColumn("attempt", F.col("attempt") + 1)
             .select(*[f.name for f in FRONTIER_SCHEMA.fields])
         )
-        hint = (
-            F.broadcast if n_selected <= self.broadcast_batch_limit
-            else (lambda df: df)
-        )
+        hint = broadcast_hint(n_selected)
         remaining = (
             frontier.join(hint(batch.select("url_sha1")), "url_sha1", "left_anti")
             .unionByName(requeued)
@@ -703,4 +662,11 @@ class CrawlJob:
         return self.trace.read(self.spark)
 
     def metrics_df(self) -> DataFrame:
-        return self.metrics.read(self.spark)
+        """Per-round, per-host counts of selected, fetched and
+        fetch-failed URLs, aggregated from the trace."""
+        failed = F.col("fetch_error").isNotNull()
+        return self.trace_df().groupBy("round", "host").agg(
+            F.count("*").alias("n_selected"),
+            F.count(F.when(~failed, 1)).alias("n_fetched"),
+            F.count(F.when(failed, 1)).alias("n_fetch_failed"),
+        )

@@ -27,6 +27,21 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# fetch-join strategy cutover: a batch of at most this many rows is
+# broadcast (the single-host reference shape); larger batches join
+# un-hinted so AQE and the bucketed pages layout decide
+BROADCAST_BATCH_LIMIT = 1_000_000
+
+
+def broadcast_hint(n_rows: int | None,
+                   limit: int = BROADCAST_BATCH_LIMIT
+                   ) -> Callable[[DataFrame], DataFrame]:
+    """``F.broadcast`` when ``n_rows`` is known and at most ``limit``,
+    else the identity (no hint)."""
+    if n_rows is not None and n_rows <= limit:
+        return F.broadcast
+    return lambda df: df
+
 
 class Transport(Protocol):
     def fetch(self, batch: DataFrame,
@@ -47,7 +62,8 @@ class LookupJoinTransport:
     for tests; stands in for timeouts/5xx of a live transport).
     """
 
-    def __init__(self, pages: DataFrame, broadcast_limit: int = 1_000_000,
+    def __init__(self, pages: DataFrame,
+                 broadcast_limit: int = BROADCAST_BATCH_LIMIT,
                  fail_predicate: Column | None = None):
         self.pages = pages
         self.broadcast_limit = broadcast_limit
@@ -55,8 +71,7 @@ class LookupJoinTransport:
 
     def fetch(self, batch: DataFrame,
               n_rows_hint: int | None = None) -> DataFrame:
-        small = n_rows_hint is not None and n_rows_hint <= self.broadcast_limit
-        hint = F.broadcast if small else (lambda df: df)
+        hint = broadcast_hint(n_rows_hint, self.broadcast_limit)
         hits = self.pages.select("url", "html").join(hint(batch), "url", "inner")
         fail = (
             self.fail_predicate if self.fail_predicate is not None

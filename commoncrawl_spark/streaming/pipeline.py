@@ -41,7 +41,8 @@ def windowed_fetch_stats(events: DataFrame, ts_col: str = "event_ts",
                          window: str = "1 minute",
                          watermark: str = "2 minutes") -> DataFrame:
     """Per-host fetch-rate over event-time windows with late-data bound —
-    the streaming analog of the per-round metrics table."""
+    the streaming analog of the per-round metrics view
+    (``CrawlJob.metrics_df``)."""
     return (
         events.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window).alias("w"), F.col("host"))

@@ -188,6 +188,10 @@ class SnapshotTable:
             self._collect_file_blooms(df.sparkSession, commit_dir)
             if self.bloom_by else {})
 
+        # an append carries the parent's files, stats, blooms and
+        # merge-on-read deletes (they still apply to the ancestor files);
+        # an overwrite starts from nothing
+        prev = None
         if operation == "append" and parent is not None:
             prev = self.snapshot(parent)
             prev_spec = tuple(prev.get("partition_by", ()))
@@ -195,45 +199,51 @@ class SnapshotTable:
                 raise ValueError(
                     f"partition spec changed: table has {prev_spec}, "
                     f"writer has {self.partition_by}")
-            files = list(prev["files"]) + [commit_dir]
-        else:
-            files = [commit_dir]
+            if self.stats_by:
+                file_stats = {**(prev.get("file_stats") or {}), **file_stats}
+            if self.bloom_by:
+                file_blooms = {**(prev.get("file_blooms") or {}),
+                               **file_blooms}
+        return self._publish(
+            parent, operation, prev, metadata,
+            files=(list(prev["files"]) if prev else []) + [commit_dir],
+            partition_by=list(self.partition_by),
+            stats_by=list(self.stats_by), file_stats=file_stats,
+            bloom_by=list(self.bloom_by), file_blooms=file_blooms,
+        )
 
-        if operation == "append" and parent is not None and self.stats_by:
-            file_stats = {**(prev.get("file_stats") or {}), **file_stats}
-        if operation == "append" and parent is not None and self.bloom_by:
-            file_blooms = {**(prev.get("file_blooms") or {}),
-                           **file_blooms}
-        if operation == "append" and parent is not None:
-            # merge-on-read deletes accumulated so far still apply to
-            # the carried-over ancestor files
-            delete_files = list(prev.get("delete_files", ()))
-            delete_key = prev.get("delete_key")
-        else:
-            delete_files, delete_key = [], None
+    def _publish(self, parent: int | None, operation: str,
+                 prev: dict[str, Any] | None,
+                 metadata: dict[str, Any] | None, **changes: Any) -> int:
+        """Publish snapshot ``parent + 1``: its manifest inherits ``prev``'s
+        files, layout and deletes (empty when ``prev`` is None) with
+        ``changes`` applied, is written to a temp file and renamed into
+        place, and only then does the LATEST pointer swap to it. Callers
+        write their data dirs first, so a commit lands data, manifest,
+        pointer — in that order."""
+        prev = prev or {}
+        new_id = 0 if parent is None else parent + 1
         manifest = {
             "id": new_id,
             "parent": parent,
             "operation": operation,
-            "files": files,
-            "partition_by": list(self.partition_by),
-            "stats_by": list(self.stats_by),
-            "file_stats": file_stats if self.stats_by else {},
-            "bloom_by": list(self.bloom_by),
-            "file_blooms": file_blooms if self.bloom_by else {},
-            "delete_files": delete_files,
-            "delete_key": delete_key,
+            "files": list(prev.get("files", ())),
+            "partition_by": list(prev.get("partition_by", ())),
+            "stats_by": list(prev.get("stats_by", ())),
+            "file_stats": prev.get("file_stats") or {},
+            "bloom_by": list(prev.get("bloom_by", ())),
+            "file_blooms": prev.get("file_blooms") or {},
+            "delete_files": list(prev.get("delete_files", ())),
+            "delete_key": prev.get("delete_key"),
+            **changes,
             "metadata": metadata or {},
         }
-        tmp = os.path.join(self._snap_dir, f".v{new_id}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self._snap_dir, f"v{new_id}.json"))
-
-        tmp_ptr = os.path.join(self._snap_dir, ".LATEST.tmp")
-        with open(tmp_ptr, "w") as fh:
-            fh.write(str(new_id))
-        os.replace(tmp_ptr, os.path.join(self._snap_dir, "LATEST"))
+        for name, body in ((f"v{new_id}.json", json.dumps(manifest)),
+                           ("LATEST", str(new_id))):
+            tmp = os.path.join(self._snap_dir, f".{name}.tmp")
+            with open(tmp, "w") as fh:
+                fh.write(body)
+            os.replace(tmp, os.path.join(self._snap_dir, name))
         return new_id
 
     def _collect_file_stats(self, spark: SparkSession,
@@ -512,33 +522,14 @@ class SnapshotTable:
             raise ValueError(
                 f"delete key changed: table has {prev_key!r}, "
                 f"delete uses {key_col!r}")
-        new_id = parent + 1
-        ddir = f"d{new_id}-{uuid.uuid4().hex[:8]}"
+        ddir = f"d{parent + 1}-{uuid.uuid4().hex[:8]}"
         keys.select(key_col).distinct().write.mode("overwrite").parquet(
             os.path.join(self._data_dir, ddir))
-        manifest = {
-            "id": new_id,
-            "parent": parent,
-            "operation": "delete",
-            "files": list(prev["files"]),
-            "partition_by": list(prev.get("partition_by", ())),
-            "stats_by": list(prev.get("stats_by", ())),
-            "file_stats": prev.get("file_stats") or {},
-            "bloom_by": list(prev.get("bloom_by", ())),
-            "file_blooms": prev.get("file_blooms") or {},
-            "delete_files": list(prev.get("delete_files", ())) + [ddir],
-            "delete_key": key_col,
-            "metadata": metadata or {},
-        }
-        tmp = os.path.join(self._snap_dir, f".v{new_id}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self._snap_dir, f"v{new_id}.json"))
-        tmp_ptr = os.path.join(self._snap_dir, ".LATEST.tmp")
-        with open(tmp_ptr, "w") as fh:
-            fh.write(str(new_id))
-        os.replace(tmp_ptr, os.path.join(self._snap_dir, "LATEST"))
-        return new_id
+        return self._publish(
+            parent, "delete", prev, metadata,
+            delete_files=list(prev.get("delete_files", ())) + [ddir],
+            delete_key=key_col,
+        )
 
     def retag(self, metadata: dict[str, Any] | None = None) -> int:
         """Metadata-only commit: a new snapshot REFERENCING the current
@@ -550,31 +541,7 @@ class SnapshotTable:
         if parent is None:
             raise FileNotFoundError(
                 f"table {self.root} has no snapshot to retag")
-        prev = self.snapshot(parent)
-        new_id = parent + 1
-        manifest = {
-            "id": new_id,
-            "parent": parent,
-            "operation": "retag",
-            "files": list(prev["files"]),
-            "partition_by": list(prev.get("partition_by", ())),
-            "stats_by": list(prev.get("stats_by", ())),
-            "file_stats": prev.get("file_stats") or {},
-            "bloom_by": list(prev.get("bloom_by", ())),
-            "file_blooms": prev.get("file_blooms") or {},
-            "delete_files": list(prev.get("delete_files", ())),
-            "delete_key": prev.get("delete_key"),
-            "metadata": metadata or {},
-        }
-        tmp = os.path.join(self._snap_dir, f".v{new_id}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self._snap_dir, f"v{new_id}.json"))
-        tmp_ptr = os.path.join(self._snap_dir, ".LATEST.tmp")
-        with open(tmp_ptr, "w") as fh:
-            fh.write(str(new_id))
-        os.replace(tmp_ptr, os.path.join(self._snap_dir, "LATEST"))
-        return new_id
+        return self._publish(parent, "retag", self.snapshot(parent), metadata)
 
     # -- read ----------------------------------------------------------------
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:

@@ -143,7 +143,7 @@ def main() -> None:
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     sections.append((
         "Fetch join (J2/S6): batch broadcast only while provably small",
-        "Under broadcast_batch_limit the slim batch broadcasts (fat pages "
+        "Under BROADCAST_BATCH_LIMIT the slim batch broadcasts (fat pages "
         "side never moves); above it the hint is withheld so AQE and the "
         "bucketed pages layout decide — no driver-memory cliff at "
         "hosts x budget batch sizes.",

@@ -148,21 +148,27 @@ def test_per_host_budget_respected(full_run):
 
 
 @pytest.mark.spark
-def test_metrics_lineage(spark, full_run):
+def test_metrics_view_over_trace(spark, full_run):
+    import os
+
     job, _, rounds = full_run
     m = job.metrics_df()
-    tot = m.agg(F.sum("n_selected"), F.sum("n_fetched")).first()
+    assert m.columns == ["round", "host", "n_selected", "n_fetched",
+                         "n_fetch_failed"]
+    tot = m.agg(F.sum("n_selected"), F.sum("n_fetched"),
+                F.sum("n_fetch_failed")).first()
     assert tot[0] == sum(r["selected"] for r in rounds)
     assert tot[1] == sum(r["fetched"] for r in rounds)
-    # per-partition lineage accounts for every fetched row, per round
-    lin = job.lineage.read(spark)
-    per_round = {r["round"]: r["s"] for r in
-                 lin.groupBy("round").agg(F.sum("n_rows").alias("s")).collect()}
-    # lineage covers exactly the rounds that fetched something; rounds
-    # that only fast-forwarded the backoff clock or only exhausted
-    # failures produce no per-partition rows
-    assert per_round == {r["round"]: r["fetched"] for r in rounds if r["fetched"]}
-    assert lin.filter(F.col("min_key") > F.col("max_key")).count() == 0
+    assert tot[2] == sum(r["retried"] + r["exhausted"] for r in rounds)
+    # the trace logs every selected URL's outcome: per round, the rows
+    # without a fetch error are exactly the fetched count
+    ok = {r["round"]: r["count"] for r in
+          job.trace_df().filter(F.col("fetch_error").isNull())
+          .groupBy("round").count().collect()}
+    assert ok == {r["round"]: r["fetched"] for r in rounds if r["fetched"]}
+    # a round commits five tables and nothing else
+    assert sorted(os.listdir(job.dir)) == sorted(
+        ["articles", "failures", "trace", "seen", "frontier"])
 
 
 @pytest.mark.spark
@@ -284,8 +290,8 @@ def test_mid_round_crash_between_commits_replays_idempotently(
                 fh.write(str(cur["parent"]))
 
     # crash point: articles/failures/trace landed, then the process died
-    # — metrics/lineage/seen/frontier never committed round 0
-    for name in ("metrics", "lineage", "seen", "frontier"):
+    # — seen/frontier never committed round 0
+    for name in ("seen", "frontier"):
         rollback(name)
 
     job2 = CrawlJob(spark, d, budget_per_host=BUDGET)  # fresh process

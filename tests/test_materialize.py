@@ -60,6 +60,26 @@ def test_cluster_mode_writes_reliable_checkpoint(spark, ckpt_dir):
     assert walked, "reliable checkpoint left no files under the dir"
 
 
+@pytest.mark.parametrize("eager", [True, False])
+def test_reliable_checkpoint_computes_plan_once(spark, ckpt_dir, eager):
+    """The checkpoint write reads the persisted frame instead of
+    recomputing the plan (a lazy checkpoint is written by a second job
+    after the first action): a UDF counting its calls runs once per
+    row, however often the result is consumed."""
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tally(x):
+        calls.add(1)
+        return x
+
+    out = materialize(spark.range(0, 200).select(tally("id").alias("id")),
+                      eager=eager)
+    assert out.count() == 200
+    assert out.count() == 200
+    assert calls.value == 200
+
+
 def test_both_modes_identical_rows(spark, tmp_path):
     df = _df(spark)
     local = sorted(materialize(df).collect())

@@ -106,29 +106,48 @@ def test_crawljob_through_http_transport(spark, fixture_dir, tmp_path):
     assert dead not in arts
 
 
-@pytest.mark.spark
-def test_backoff_skips_rounds_deterministically(spark, fixture_dir, tmp_path):
-    """A transiently failing URL is rescheduled at rounds 0, 2, 6, 14
-    (min(2*2^attempt, cap) round gaps), then exhausted — while healthy
-    URLs complete in round 0. The trace stays fully deterministic."""
+def _crawl_with_one_flaky_url(spark, fixture_dir, ckpt, **job_args):
+    """Crawl three extractable pages, the first failing on every
+    attempt; returns (job, rounds, urls, the flaky URL's rounds)."""
     pages = spark.read.parquet(f"{fixture_dir}/pages.parquet")
     good = pages.filter(F.length(F.trim("text")) > 0)  # extractable pages
     urls = [r["url"] for r in good.limit(3).collect()]
     flaky_url = urls[0]
 
-    job = CrawlJob(spark, str(tmp_path / "backoff"), budget_per_host=100,
-                   max_retries=3)
+    job = CrawlJob(spark, ckpt, budget_per_host=100, max_retries=3,
+                   **job_args)
     job.seed_from_cdx(_mini_cdx(spark, urls), crawl_order=["CC-MAIN-2024-10"])
     rounds = job.run(pages, transient_fail=F.col("url") == flaky_url)
 
     sched = sorted(
         r["round"] for r in job.trace_df().collect() if r["url"] == flaky_url
     )
+    return job, rounds, urls, sched
+
+
+@pytest.mark.spark
+def test_backoff_skips_rounds_deterministically(spark, fixture_dir, tmp_path):
+    """A transiently failing URL is rescheduled at rounds 0, 2, 6, 14
+    (min(2*2^attempt, cap) round gaps), then exhausted — while healthy
+    URLs complete in round 0. The trace stays fully deterministic."""
+    job, rounds, urls, sched = _crawl_with_one_flaky_url(
+        spark, fixture_dir, str(tmp_path / "backoff"))
     assert sched == [0, 2, 6, 14]
     healthy = {r["url"] for r in job.articles_df().collect()}
     assert healthy == set(urls[1:])
     # rounds in between only fast-forward; they select nothing
     assert all(r["selected"] == 0 for r in rounds if r["round"] not in sched)
+
+
+@pytest.mark.spark
+def test_backoff_cap_of_one_retries_every_round(spark, fixture_dir, tmp_path):
+    """backoff_cap_rounds=1 caps every gap at one round: the failing URL
+    is scheduled in consecutive rounds until its retries are exhausted."""
+    job, _, urls, sched = _crawl_with_one_flaky_url(
+        spark, fixture_dir, str(tmp_path / "backoff1"), backoff_cap_rounds=1)
+    assert sched == [0, 1, 2, 3]
+    fails = {r["url"] for r in job.failures.read(spark).collect()}
+    assert urls[0] in fails
 
 
 @pytest.mark.spark
